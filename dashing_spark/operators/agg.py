@@ -8,13 +8,18 @@ get partial aggregation from Catalyst for free, but pandas grouped-agg
 UDFs do NOT (each group's rows all reach one task), so we implement the
 partial/final split explicitly:
 
-  stage 1 (map-side combine): ``mapInPandas`` — every input partition
+  stage 1 (map-side combine): ``mapInArrow`` — every input partition
       emits AT MOST ONE ROW PER KEY, holding a serialized partial sketch.
       All hashing/updating is whole-batch numpy on Arrow batches.
-  stage 2 (optional salt level): ``groupBy(key, part_id % salt)`` merge —
+  stage 2 (optional salt level): merge by ``(key, part_id % salt)`` —
       the explicit tree level that bounds fan-in per task under skew
       (north rule; analogous to par_reduce's log2 tree).
-  stage 3: ``groupBy(key)`` merge -> final sketch row per key.
+  stage 3: merge by key -> final sketch row per key.
+
+Both merge levels are :func:`merge_sketches_by_key`: hash-repartition
+on the group columns, sort within partitions, and fold each run of
+equal keys in one ``mapInArrow`` pass per partition — one Python call
+per partition, not one pandas frame per key.
 
 Only sketch blobs cross the shuffle (p=14 HLL = 16 KiB), so at 10^12
 input rows the shuffle volume is O(#keys × #partitions), not O(rows).
@@ -75,18 +80,23 @@ def _result_schema(df: DataFrame, key_cols: Sequence[str]) -> T.StructType:
     )
 
 
-def _emit_partials(acc: dict, key_cols: Sequence[str]) -> pd.DataFrame:
+def _emit_partials(acc: dict, partial_schema: T.StructType):
+    """One Arrow batch of (key..., part id, sketch) rows from ``acc``,
+    a dict of key tuple -> sketch."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = to_arrow_schema(partial_schema)
     part_id = TaskContext.get().partitionId() if TaskContext.get() else -1
-    rows = {k: [] for k in key_cols}
-    blobs = []
-    for key, sk in acc.items():
-        for c, v in zip(key_cols, key):
-            rows[c].append(v)
-        blobs.append(sk.to_bytes())
-    out = pd.DataFrame(rows)
-    out[_PART_COL] = np.int32(part_id)
-    out[SKETCH_COL] = blobs
-    return out
+    keys = list(acc)
+    n_keys = len(schema) - 2
+    arrays = [
+        pa.array([k[i] for k in keys], type=schema.field(i).type)
+        for i in range(n_keys)
+    ]
+    arrays.append(pa.array(np.full(len(keys), part_id, dtype=np.int32)))
+    arrays.append(pa.array([sk.to_bytes() for sk in acc.values()], pa.binary()))
+    return pa.RecordBatch.from_arrays(arrays, schema=schema)
 
 
 def _shingle_hash_df(
@@ -117,9 +127,8 @@ def _batch_key_codes(rb, n_keys: int):
     Single key column: Arrow dictionary-encode yields the codes without
     materializing a Python object per row — only the len(uniq)
     dictionary values cross into Python (as acc keys). Multi-key (or
-    null-bearing) batches fall back to pandas factorize. Shared by the
-    plain and weighted-CM partial stages so the fast path cannot drift
-    between them.
+    null-bearing) batches fall back to pandas factorize. Shared by every
+    partial stage so the fast path cannot drift between them.
     """
     enc = rb.column(0).dictionary_encode() if n_keys == 1 else None
     if enc is not None and enc.indices.null_count == 0:
@@ -129,6 +138,18 @@ def _batch_key_codes(rb, n_keys: int):
         keys = list(zip(*(rb.column(i).to_pylist() for i in range(n_keys))))
         codes, uniq = pd.factorize(pd.Series(keys, dtype=object))
     return codes, uniq
+
+
+def _group_rows(codes: np.ndarray, n_groups: int) -> list[np.ndarray]:
+    """Row indices of each group code 0..n_groups-1, in input order."""
+    order = np.argsort(codes, kind="stable")
+    bounds = np.searchsorted(codes[order], np.arange(n_groups + 1))
+    return [order[bounds[i] : bounds[i + 1]] for i in range(n_groups)]
+
+
+def _hash_array(col) -> np.ndarray:
+    """uint64 view of an integer hash column of an Arrow batch."""
+    return col.to_numpy(zero_copy_only=False).astype(np.int64, copy=False).view(np.uint64)
 
 
 def sketch_tokens_by_key(
@@ -207,10 +228,6 @@ def sketch_tokens_by_key(
     n_keys = len(key_cols)
 
     def partial_fn(batches):
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        arrow_schema = to_arrow_schema(partial_schema)
         acc: dict[tuple, object] = {}
         n_rows = 0
         for rb in batches:
@@ -223,30 +240,18 @@ def sketch_tokens_by_key(
                 th, lens = hashing.hash_tokens_arrow(rb.column(n_keys))
             sh, doc_idx = hashing.shingle_hashes(th, lens, w=shingle_w, seed=seed)
             codes, uniq = _batch_key_codes(rb, n_keys)
-            if len(sh):
-                shingle_codes = codes[doc_idx]
-                order = np.argsort(shingle_codes, kind="stable")
-                bounds = np.searchsorted(
-                    shingle_codes[order], np.arange(len(uniq) + 1)
-                )
-            for ci, key in enumerate(uniq):
+            for key, seg in zip(uniq, _group_rows(codes[doc_idx], len(uniq))):
                 sk = acc.get(key)
                 if sk is None:
                     sk = acc[key] = make_sketch()
-                if len(sh):
-                    seg = order[bounds[ci] : bounds[ci + 1]]
-                    if len(seg):
-                        sk.update_hashes(sh[seg])
+                if len(seg):
+                    sk.update_hashes(sh[seg])
         if counters:
             if "rows" in counters:
                 counters["rows"].add(n_rows)
             if "partials" in counters:
                 counters["partials"].add(len(acc))
-        yield pa.RecordBatch.from_pandas(
-            _emit_partials(acc, key_cols),
-            schema=arrow_schema,
-            preserve_index=False,
-        )
+        yield _emit_partials(acc, partial_schema)
 
     partials = src.mapInArrow(partial_fn, schema=partial_schema)
     return _merge_partials(partials, key_cols, salt, counters)
@@ -293,10 +298,6 @@ def _sketch_tokens_multi(
     widths = sorted({w for _, w, _ in variants})
 
     def partial_fn(batches):
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        arrow_schema = to_arrow_schema(partial_schema)
         acc: dict[tuple, object] = {}
         n_rows = 0
         for rb in batches:
@@ -305,22 +306,11 @@ def _sketch_tokens_multi(
             codes, uniq = _batch_key_codes(rb, n_keys)
             for w in widths:
                 sh, doc_idx = hashing.shingle_hashes(th, lens, w=w, seed=seed)
-                if len(sh):
-                    shingle_codes = codes[doc_idx]
-                    order = np.argsort(shingle_codes, kind="stable")
-                    bounds = np.searchsorted(
-                        shingle_codes[order], np.arange(len(uniq) + 1)
-                    )
                 w_variants = [(t, mk) for t, vw, mk in variants if vw == w]
-                for ci, key in enumerate(uniq):
-                    vals = None
-                    if len(sh):
-                        seg = order[bounds[ci] : bounds[ci + 1]]
-                        if len(seg):
-                            # one fancy-index copy per key, shared by
-                            # every sketch type (update_hashes never
-                            # mutates its input)
-                            vals = sh[seg]
+                for key, seg in zip(uniq, _group_rows(codes[doc_idx], len(uniq))):
+                    # one fancy-index copy per key, shared by every
+                    # sketch type (update_hashes never mutates its input)
+                    vals = sh[seg] if len(seg) else None
                     for tag, make_sketch in w_variants:
                         tk = (tag, *key)
                         sk = acc.get(tk)
@@ -333,11 +323,7 @@ def _sketch_tokens_multi(
                 counters["rows"].add(n_rows)
             if "partials" in counters:
                 counters["partials"].add(len(acc))
-        yield pa.RecordBatch.from_pandas(
-            _emit_partials(acc, out_keys),
-            schema=arrow_schema,
-            preserve_index=False,
-        )
+        yield _emit_partials(acc, partial_schema)
 
     partials = src.mapInArrow(partial_fn, schema=partial_schema)
     return _merge_partials(partials, out_keys, salt, counters)
@@ -429,17 +415,14 @@ def sketch_hash_col_multi_type(
             T.StructField(SKETCH_COL, T.BinaryType(), False),
         ]
     )
+    n_keys = len(key_cols)
 
     def partial_fn(batches):
         acc: dict[tuple, object] = {}
-        for pdf in batches:
-            h = pdf[hash_col].to_numpy(dtype=np.int64).view(np.uint64)
-            keys = list(zip(*(pdf[k] for k in key_cols)))
-            codes, uniq = pd.factorize(pd.Series(keys, dtype=object))
-            order = np.argsort(codes, kind="stable")
-            bounds = np.searchsorted(codes[order], np.arange(len(uniq) + 1))
-            for ci, key in enumerate(uniq):
-                seg = order[bounds[ci] : bounds[ci + 1]]
+        for rb in batches:
+            h = _hash_array(rb.column(n_keys))
+            codes, uniq = _batch_key_codes(rb, n_keys)
+            for key, seg in zip(uniq, _group_rows(codes, len(uniq))):
                 vals = h[seg] if len(seg) else None  # one copy per key
                 for name, make_sketch in factories.items():
                     tk = (name, *key)
@@ -448,9 +431,9 @@ def sketch_hash_col_multi_type(
                         sk = acc[tk] = make_sketch()
                     if vals is not None:
                         sk.update_hashes(vals)
-        yield _emit_partials(acc, out_keys)
+        yield _emit_partials(acc, partial_schema)
 
-    partials = src.mapInPandas(partial_fn, schema=partial_schema)
+    partials = src.mapInArrow(partial_fn, schema=partial_schema)
     return _merge_partials(partials, out_keys, salt)
 
 
@@ -507,32 +490,19 @@ def _sketch_tokens_weighted_cm(
     n_keys = len(key_cols)
 
     def partial_fn(batches):
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-
         from dashing_spark.functions.cms import CountMinSketch
 
-        arrow_schema = to_arrow_schema(partial_schema)
         acc: dict[tuple, object] = {}
         cms: dict[tuple, CountMinSketch] = {}
         for rb in batches:
             th, lens = hashing.hash_tokens_arrow(rb.column(n_keys))
             sh, doc_idx = hashing.shingle_hashes(th, lens, w=shingle_w, seed=seed)
             codes, uniq = _batch_key_codes(rb, n_keys)
-            if len(sh):
-                shingle_codes = codes[doc_idx]
-                order = np.argsort(shingle_codes, kind="stable")
-                bounds = np.searchsorted(
-                    shingle_codes[order], np.arange(len(uniq) + 1)
-                )
-            for ci, key in enumerate(uniq):
+            for key, seg in zip(uniq, _group_rows(codes[doc_idx], len(uniq))):
                 sk = acc.get(key)
                 if sk is None:
                     sk = acc[key] = make_sketch()
                     cms[key] = CountMinSketch(cm_lg_width, cm_depth)
-                if not len(sh):
-                    continue
-                seg = order[bounds[ci] : bounds[ci + 1]]
                 if not len(seg):
                     continue
                 vals = sh[seg]
@@ -552,11 +522,7 @@ def _sketch_tokens_weighted_cm(
                         vals ^ hashing.splitmix64(occ.view(np.uint64))
                     )
                 sk.update_hashes(items)
-        yield pa.RecordBatch.from_pandas(
-            _emit_partials(acc, key_cols),
-            schema=arrow_schema,
-            preserve_index=False,
-        )
+        yield _emit_partials(acc, partial_schema)
 
     partials = src.mapInArrow(partial_fn, schema=partial_schema)
     return _merge_partials(partials, key_cols, salt)
@@ -582,25 +548,24 @@ def sketch_numeric_by_key(
         keep = keep & ~F.isnan(value_col)
     src = df.filter(keep).select(*key_cols, value_col)
     partial_schema = _partial_schema(src, key_cols)
+    n_keys = len(key_cols)
 
     def partial_fn(batches):
         acc: dict[tuple, object] = {}
-        for pdf in batches:
-            vals = pdf[value_col].to_numpy(dtype=np.float64, na_value=np.nan)
-            keys = list(zip(*(pdf[k] for k in key_cols)))
-            codes, uniq = pd.factorize(pd.Series(keys, dtype=object))
-            order = np.argsort(codes, kind="stable")
-            bounds = np.searchsorted(codes[order], np.arange(len(uniq) + 1))
-            for ci, key in enumerate(uniq):
+        for rb in batches:
+            # integer, float and decimal columns alike; decimals arrive
+            # as Decimal objects, which astype rounds exactly (float())
+            vals = rb.column(n_keys).to_numpy(zero_copy_only=False).astype(np.float64)
+            codes, uniq = _batch_key_codes(rb, n_keys)
+            for key, seg in zip(uniq, _group_rows(codes, len(uniq))):
                 sk = acc.get(key)
                 if sk is None:
                     sk = acc[key] = make_sketch()
-                seg = order[bounds[ci] : bounds[ci + 1]]
                 if len(seg):
                     sk.update_batch(vals[seg])
-        yield _emit_partials(acc, key_cols)
+        yield _emit_partials(acc, partial_schema)
 
-    partials = src.mapInPandas(partial_fn, schema=partial_schema)
+    partials = src.mapInArrow(partial_fn, schema=partial_schema)
     return _merge_partials(partials, key_cols, salt)
 
 
@@ -619,48 +584,31 @@ def sketch_hash_col_by_key(
     cols = [*key_cols, hash_col] + ([weight_col] if weight_col else [])
     src = df.select(*cols)
     partial_schema = _partial_schema(src, key_cols)
+    n_keys = len(key_cols)
 
     def partial_fn(batches):
         acc: dict[tuple, object] = {}
-        for pdf in batches:
-            h = pdf[hash_col].to_numpy(dtype=np.int64).view(np.uint64)
+        for rb in batches:
+            h = _hash_array(rb.column(n_keys))
             w = (
-                pdf[weight_col].to_numpy(dtype=np.int64)
+                rb.column(n_keys + 1).to_numpy(zero_copy_only=False).astype(np.int64)
                 if weight_col
                 else None
             )
-            keys = list(zip(*(pdf[k] for k in key_cols)))
-            codes, uniq = pd.factorize(pd.Series(keys, dtype=object))
-            order = np.argsort(codes, kind="stable")
-            bounds = np.searchsorted(codes[order], np.arange(len(uniq) + 1))
-            for ci, key in enumerate(uniq):
+            codes, uniq = _batch_key_codes(rb, n_keys)
+            for key, seg in zip(uniq, _group_rows(codes, len(uniq))):
                 sk = acc.get(key)
                 if sk is None:
                     sk = acc[key] = make_sketch()
-                seg = order[bounds[ci] : bounds[ci + 1]]
                 if len(seg):
                     if w is not None:
                         sk.update_hashes(h[seg], weights=w[seg])
                     else:
                         sk.update_hashes(h[seg])
-        yield _emit_partials(acc, key_cols)
+        yield _emit_partials(acc, partial_schema)
 
-    partials = src.mapInPandas(partial_fn, schema=partial_schema)
+    partials = src.mapInArrow(partial_fn, schema=partial_schema)
     return _merge_partials(partials, key_cols, salt)
-
-
-def _merge_rows(
-    pdf: pd.DataFrame, key_cols: Sequence[str], acc_merges=None
-) -> pd.DataFrame:
-    blobs = pdf[SKETCH_COL]
-    sk = sketch_from_bytes(blobs.iloc[0])
-    for b in blobs.iloc[1:]:
-        sk.merge(sketch_from_bytes(b))
-    if acc_merges is not None:
-        acc_merges.add(max(0, len(blobs) - 1))
-    out = pdf.iloc[[0]][list(key_cols)].copy()
-    out[SKETCH_COL] = [sk.to_bytes()]
-    return out
 
 
 def _merge_partials(
@@ -669,54 +617,107 @@ def _merge_partials(
     salt: int | None,
     counters: dict | None = None,
 ) -> DataFrame:
-    result_schema = _result_schema(partials, key_cols)
-    acc_merges = (counters or {}).get("merges")
-
-    def merge_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _merge_rows(pdf, key_cols, acc_merges)
-
     if salt and salt > 1:
         # explicit tree level: cap fan-in per merge task (par_reduce
         # analogue, /root/reference/src/union.cpp:10-24)
         salted = partials.withColumn(
             "__salt", F.pmod(F.col(_PART_COL), F.lit(salt)).cast("int")
         )
-        salted_schema = T.StructType(
-            _key_schema(partials, key_cols)
-            + [
-                T.StructField("__salt", T.IntegerType(), False),
-                T.StructField(SKETCH_COL, T.BinaryType(), False),
-            ]
+        partials = merge_sketches_by_key(salted, [*key_cols, "__salt"], counters)
+    return merge_sketches_by_key(partials, key_cols, counters)
+
+
+def _new_run_flags(keys: list) -> np.ndarray:
+    """For rows 1..n-1 of equal-length Arrow key columns: does the row's
+    key differ from the previous row's? Nulls equal nulls, as in
+    ``groupBy``."""
+    import pyarrow.compute as pc
+
+    n = len(keys[0])
+    differ = np.zeros(n - 1, dtype=bool)
+    for col in keys:
+        cur, prev = col.slice(1), col.slice(0, n - 1)
+        same = pc.or_(
+            pc.fill_null(pc.equal(cur, prev), False),
+            pc.and_(cur.is_null(), prev.is_null()),
         )
-
-        def merge_salted(pdf: pd.DataFrame) -> pd.DataFrame:
-            out = _merge_rows(pdf, key_cols, acc_merges)
-            out["__salt"] = pdf["__salt"].iloc[0]
-            return out[[*key_cols, "__salt", SKETCH_COL]]
-
-        partials = (
-            salted.groupBy(*key_cols, "__salt")
-            .applyInPandas(merge_salted, schema=salted_schema)
-        )
-    else:
-        partials = partials.drop(_PART_COL)
-
-    return partials.groupBy(*key_cols).applyInPandas(merge_fn, schema=result_schema)
+        differ |= ~same.to_numpy(zero_copy_only=False)
+    return differ
 
 
 def merge_sketches_by_key(
-    sketches: DataFrame, key_cols: Sequence[str]
+    sketches: DataFrame, key_cols: Sequence[str], counters: dict | None = None
 ) -> DataFrame:
     """Merge a (key..., sketch) table down to one sketch per key — the
     cross-table union path (`dashing union` over sketch files built in
     separate runs, /root/reference/src/union.cpp:32-58). Input rows may
     come from different builds (e.g. different precisions after
-    `fold_expr`); blobs under one key must be merge-compatible."""
+    `fold_expr`); blobs under one key must be merge-compatible. Both
+    merge levels of every build in this module run here. Columns other
+    than the key and sketch columns are dropped.
+
+    The rows are hash-repartitioned on the key and sorted within each
+    partition; one ``mapInArrow`` pass per partition then folds each run
+    of equal keys into one open sketch, emitting it when the key
+    changes — a run may span Arrow batches. ``counters["merges"]``, if
+    given, counts the ``merge`` calls."""
     ensure_shipped(sketches.sparkSession)
-    # the no-salt _merge_partials branch IS this operation (its
-    # drop(_PART_COL) is a no-op here) — one merge implementation
-    return _merge_partials(
-        sketches.select(*key_cols, SKETCH_COL), key_cols, salt=None
+    key_cols = list(key_cols)
+    src = sketches.select(*key_cols, SKETCH_COL)
+    schema = _result_schema(src, key_cols)
+    n_keys = len(key_cols)
+    acc_merges = (counters or {}).get("merges")
+
+    def merge_fn(batches):
+        import pyarrow as pa
+
+        names = [*key_cols, SKETCH_COL]
+        last = None  # 1-row key columns of the previous row: the open run's key
+        sk = None  # the open run's sketch
+        n_merges = 0
+        for rb in batches:
+            if not rb.num_rows:
+                continue
+            keys = [rb.column(i) for i in range(n_keys)]
+            if last is None:
+                new_run = np.concatenate(([True], _new_run_flags(keys)))
+            else:
+                # prepend the open run's key: row 0 of ``keys`` is now
+                # the previous row, so batch row i is keys row i + 1
+                keys = [pa.concat_arrays([a, b]) for a, b in zip(last, keys)]
+                new_run = _new_run_flags(keys)
+            off = len(keys[0]) - rb.num_rows
+            closed = []  # keys row of the last row of each closed run
+            blobs = []
+            for i, (new, blob) in enumerate(
+                zip(new_run, rb.column(n_keys).to_pylist())
+            ):
+                part = sketch_from_bytes(blob)
+                if not new:
+                    sk.merge(part)
+                    n_merges += 1
+                    continue
+                if sk is not None:
+                    closed.append(i + off - 1)
+                    blobs.append(sk.to_bytes())
+                sk = part
+            if closed:
+                yield pa.RecordBatch.from_arrays(
+                    [k.take(closed) for k in keys] + [pa.array(blobs, pa.binary())],
+                    names=names,
+                )
+            last = [k.slice(len(k) - 1, 1) for k in keys]
+        if sk is not None:
+            yield pa.RecordBatch.from_arrays(
+                last + [pa.array([sk.to_bytes()], pa.binary())], names=names
+            )
+        if acc_merges is not None:
+            acc_merges.add(n_merges)
+
+    return (
+        src.repartition(*key_cols)
+        .sortWithinPartitions(*key_cols)
+        .mapInArrow(merge_fn, schema=schema)
     )
 
 

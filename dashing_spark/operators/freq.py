@@ -72,12 +72,20 @@ def cms_by_key(
     depth: int = 4,
     salt: int | None = None,
 ) -> DataFrame:
-    """One count-min sketch of the token stream per key."""
-    toks = df.select(
-        *key_cols, F.explode(F.split(F.col(text_col), " ", -1)).alias("token")
-    ).withColumn("__h", F.xxhash64("token"))
-    return agg.sketch_hash_col_by_key(
-        toks, key_cols, lambda: CountMinSketch.empty(lg_width, depth), "__h", salt=salt
+    """One count-min sketch of the token stream per key.
+
+    Tokens are hashed JVM-side into one ``array<long>`` per row
+    (``agg.token_hashes_col``: the same split and xxhash64 as the
+    explode-based builds and ``cms_point_query``), so no row is made
+    per token. Null-text rows carry no tokens and are dropped first: a
+    key with only such rows gets no sketch."""
+    return agg.sketch_tokens_by_key(
+        df.filter(F.col(text_col).isNotNull()),
+        key_cols,
+        lambda: CountMinSketch.empty(lg_width, depth),
+        text_col=text_col,
+        salt=salt,
+        hasher="jvm",
     )
 
 
